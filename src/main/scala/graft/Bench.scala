@@ -239,22 +239,17 @@ object Bench {
     *     (loaded calib > 1.25× the committed run's AND total above the
     *     committed total — a faster total is always allowed to land:
     *     better denominators tighten the guard).
-    * A deliberate re-baseline on a changed placement class overrules
+    * A committed denominator whose top-level value or calib_loaded does
+    * not parse cannot be guarded, so the run goes to the sidecar with a
+    * note. A deliberate re-baseline on a changed placement class overrules
     * with SPARK_GRAFT_FORCE_DETAIL=1. Pure and unit-tested
     * (BenchGuardSpec); returns (eligible, optional stderr note).
     */
   private[graft] def detailWriteEligible(prior: Option[String],
       stealFrac: Double, calibLoaded: Double, total: Double,
       force: Boolean, sfDir: String = ""): (Boolean, Option[String]) = {
-    // "value" is anchored to the document prefix: the committed detail
-    // artifact leads with {"metric":"total","value":...} by construction,
-    // and an unanchored first-occurrence match would silently misread a
-    // future format that nests another "value" key earlier. Other keys
-    // (calib_loaded) are top-level-unique, first occurrence is fine.
-    def scalar(p: String, key: String): Option[Double] =
-      (if (key == "value") "^\\{\"metric\":\"total\",[^{}]*?\"value\":([0-9.]+)"
-       else "\"" + key + "\":([0-9.]+)").r
-        .findFirstMatchIn(p).map(_.group(1).toDouble)
+    val sidecar = " — writing BENCH_DETAIL.dirty.json " +
+      "(SPARK_GRAFT_FORCE_DETAIL=1 overrules)"
     if (force) (true, None)
     else if (stealFrac > 0.10)
       (false, Some(f"[bench-detail] run lost ${stealFrac * 100}%.1f%% of " +
@@ -262,37 +257,45 @@ object Bench {
     else prior match {
       case None => (true, None)
       case Some(p) =>
+        // top-level fields only: a nested "value" can never be read as
+        // the committed total
+        val doc = scala.util.Try(
+          new com.fasterxml.jackson.databind.ObjectMapper().readTree(p))
+          .toOption.filter(_.isObject)
+        def field(key: String) = doc.flatMap(d => Option(d.get(key)))
+        def num(key: String) = field(key).filter(_.isNumber).map(_.asDouble)
         // a committed denominator at a DIFFERENT scale factor must never
         // be overwritten by a small-sf dev sweep: its total is trivially
         // "faster", which the faster-always-lands rule would otherwise
-        // wave through (r22: an sf0.001 smoke run from the repo cwd was
-        // one eligible write away from replacing the sf0.1 baseline)
-        if (sfDir.nonEmpty && p.contains("\"sf\":\"") &&
-            !p.contains(s""""sf":"$sfDir""""))
+        // wave through
+        val priorSf = field("sf").filter(_.isTextual).map(_.asText)
+        if (sfDir.nonEmpty && priorSf.exists(sfToken(_) != sfToken(sfDir)))
           (false, Some("[bench-detail] run sf " + sfDir + " differs from " +
-            "the committed denominator's — writing BENCH_DETAIL.dirty.json " +
-            "(SPARK_GRAFT_FORCE_DETAIL=1 overrules)"))
+            "the committed denominator's" + sidecar))
         else if (stealFrac > 0.05)
           (false, Some(f"[bench-detail] steal+iowait " +
             f"${stealFrac * 100}%.1f%% of wall exceeds the 5%% " +
-            "overwrite bar while a committed clean denominator exists — " +
-            "writing BENCH_DETAIL.dirty.json (the committed artifact " +
-            "stays the guard baseline; SPARK_GRAFT_FORCE_DETAIL=1 " +
-            "overrules)"))
-        else {
-          val slowerHostSlowerRun = for {
-            pc <- scalar(p, "calib_loaded"); pt <- scalar(p, "value")
-          } yield calibLoaded > 1.25 * pc && total > pt
-          if (slowerHostSlowerRun.contains(true))
+            "overwrite bar while a committed clean denominator exists, " +
+            "which stays the guard baseline" + sidecar))
+        else (num("calib_loaded"), num("value")) match {
+          case (Some(pc), Some(pt)) if calibLoaded > 1.25 * pc && total > pt =>
             (false, Some(f"[bench-detail] loaded calib $calibLoaded%.3f " +
               "is >1.25x the committed denominator's and the sweep is " +
-              "slower — placement, not code; writing " +
-              "BENCH_DETAIL.dirty.json (SPARK_GRAFT_FORCE_DETAIL=1 " +
-              "overrules)"))
-          else (true, None)
+              "slower — placement, not code" + sidecar))
+          case (Some(_), Some(_)) => (true, None)
+          // the placement guard cannot run: say so, never skip it silently
+          case _ =>
+            (false, Some("[bench-detail] the committed denominator's " +
+              "top-level value or calib_loaded does not parse" + sidecar))
         }
     }
   }
+
+  /** The scale-factor token of an sf directory — its last path segment —
+    * so `…/sf0.1/`, `…/sf0.1` and a relocated `…/sf0.1` compare equal.
+    */
+  private[graft] def sfToken(dir: String): String =
+    dir.split('/').filter(_.nonEmpty).lastOption.getOrElse(dir)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -524,9 +527,7 @@ object Bench {
       // query's timed window (r8 saw an in-sweep-only 7 s on a query
       // that measures 1 s isolated) — paying the removal wall here
       // keeps it out of every measurement.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.operators.Rounds.releaseAll(spark)
       // drain async listener events before the next query takes the name
       if (isStreaming(q.name)) quiesceListener()
       out

@@ -45,9 +45,7 @@ object DevBasketAB {
         val t0 = System.nanoTime()
         byName(n).fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.operators.Rounds.releaseAll(spark)
         Thread.sleep(300)
         var cpuMs = 0L
         stages.synchronized { cpuMs = stages.map(_._5).sum }

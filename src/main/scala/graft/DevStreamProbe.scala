@@ -85,9 +85,7 @@ object DevStreamProbe {
               s"durationMs=${new java.util.TreeMap(d)}")
           }
         }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.operators.Rounds.releaseAll(spark)
       }
     }
     spark.stop()

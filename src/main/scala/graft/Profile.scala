@@ -43,9 +43,7 @@ object Profile {
           val dt = (System.nanoTime() - t0) / 1e9
           // same block release as Bench: queries that persist/localCheckpoint
           // would otherwise inflate later reps (storage-region pressure)
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          graft.operators.Rounds.releaseAll(spark)
           dt
         }
         println(f"$n%-28s min=${times.min}%.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}")

@@ -173,9 +173,7 @@ object ScalingBench {
       System.err.println(s"[scaling] ${q.name} @ $pn failed: $e")
       Double.NaN
     }
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    graft.operators.Rounds.releaseAll(spark)
     (t, rows)
   }
 

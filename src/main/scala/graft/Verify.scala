@@ -28,9 +28,7 @@ object Verify {
       }
       // free per-query persisted/checkpointed blocks (see Bench for why:
       // leaked blocks compound across the 130-query sweep)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.operators.Rounds.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

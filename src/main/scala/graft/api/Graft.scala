@@ -14,18 +14,21 @@ import org.apache.spark.sql.functions._
   *   docs  — (doc_id LONG, text STRING)
   *   store — (id LONG, embedding ARRAY<FLOAT>)
   * Everything returns a DataFrame and nothing collects to the driver.
-  * Laziness caveat: the MinHash pipeline ([[minhashNearDupPairs]],
-  * [[dedupClusters]], [[dedupClustersLogN]], [[nearDupKeepList]], and
-  * [[mmrRerank]]'s greedy)
-  * materializes bounded intermediates eagerly (persist/localCheckpoint
-  * of candidate/label/edge frames per round — required so iterative
-  * stages don't replay
-  * the full sketch per round), and the PQ family ([[pqTopK]],
-  * [[ivfpqTopK]]) runs its k-means training collects (bounded: KB-sized
-  * codebooks) at CALL time and leaves the routing assignment cached
-  * until released. Long-lived sessions issuing many such
-  * calls should release blocks between calls:
-  * `spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))`.
+  *
+  * Eagerness and release contract: the iterative kernels ([[pageRank]],
+  * [[personalizedPageRank]], [[kCore]], [[shortestHops]],
+  * [[shortestCost]], [[labelPropagation]], [[dedupClusters]],
+  * [[dedupClustersLogN]]) and the MinHash, SimHash and semantic dedup
+  * pipelines run their rounds at CALL time and release every frame they
+  * pinned before returning: loop invariants leave the cache, superseded
+  * round checkpoints leave the block manager, and a result that read a
+  * pinned invariant is checkpointed first. The returned frame may hold
+  * its own checkpoint blocks; Spark's context cleaner frees them when
+  * the frame is garbage. Repeated calls in one session therefore need
+  * no sweep between them. Two exceptions keep blocks cached: the index
+  * of [[ivfBuild]] until [[IvfIndex.unpersist]], and the routing
+  * assignment of [[ivfpqTopK]]. The PQ family ([[pqTopK]],
+  * [[ivfpqTopK]]) trains its KB-sized codebooks at call time.
   */
 object Graft {
 
@@ -484,9 +487,10 @@ object Graft {
     * arithmetic — deterministic under any summation order. Contract:
     * every node must appear as a source (an undirected graph — both
     * directions present — satisfies this); a target-only node
-    * accumulates rank but contributes none. Returns (u, pr). Eagerness
-    * caveat: edges persist and intermediate iterations localCheckpoint
-    * (see the class note on releasing blocks).
+    * accumulates rank but contributes none. Returns (u, pr). Eager: the
+    * rounds and the result are computed at call time, every third round
+    * and the result are checkpointed, and the adjacency cache is
+    * released before the call returns (see the class note).
     *
     * `saltDegree` > 0 enables the two-level SALTED adjacency for
     * power-law graphs: a node whose degree exceeds the threshold holds

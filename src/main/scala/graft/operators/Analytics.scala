@@ -315,10 +315,9 @@ object Analytics {
     * engine. Contract: every node must appear as a SOURCE (undirected
     * graphs — both edge directions present — satisfy this); a
     * target-only node accumulates rank but contributes none. Returns
-    * (u, pr) after `iters` iterations. The edge frame is deduplicated
-    * and persisted; intermediate iterations localCheckpoint so the plan
-    * doesn't grow exponentially with `iters` (same discipline as the
-    * connected-components rounds).
+    * (u, pr) after `iters` iterations. The adjacency is pinned for the
+    * rounds and released on return, so the result is checkpointed
+    * eagerly first (see [[rankRounds]] for the lineage cadence).
     *
     * Internally the edge multiset is held as an ADJACENCY LIST
     * (u, neighbors): a pair-level codegen DISTINCT (map-side partial
@@ -349,37 +348,47 @@ object Analytics {
     * the single-row adjacency and plans NO extra reduce.
     */
   private[graft] def pageRankOf(edges: DataFrame, iters: Int,
-      saltDegree: Long = 0L, salts: Int = 16): DataFrame = {
-    // persist + one blocking count: the n job materializes the adjacency
-    // cache, so every downstream frame (p0, every iteration join) reads
-    // InMemoryRelation instead of re-deriving the groupBy. n is an O(1)
-    // driver scalar folded into the plan as a LITERAL (Scala Long
-    // division == SQL div), removing per-iteration one-row joins.
-    val saltedLayout = saltDegree > 0L
-    val adj = pageRankAdjacency(edges, saltDegree, salts).persist()
-    // one row per node for n and p0 (the salted layout holds hubs on
-    // several rows; the distinct reads the already-persisted adj)
-    val nodes =
-      if (saltedLayout) adj.select(col("u")).distinct() else adj.select(col("u"))
-    val n = nodes.count()
-    require(n > 0, "pageRank: edge frame has no source nodes")
-    val init = 1000000000L / n
-    val base = (15L * init) / 100L
-    val p0 = nodes.select(col("u").as("pu"), lit(init).as("pr"))
-    def step(p: DataFrame): DataFrame =
-      adj.join(p, col("u") === col("pu"))
-        .select(col("vs"), expr("pr div d").as("c"))
-        .select(explode(col("vs")).as("pu"), col("c"))
-        .groupBy(col("pu"))
-        .agg((lit(base) + expr("(85L * sum(c)) div 100")).as("pr"))
-    // localCheckpoint is EAGER — each one is a full extra job — and plan
-    // depth grows only LINEARLY per round here, so cut the lineage every
-    // third round instead of every round: short walks (iters <= 3, both
-    // bench queries) plan zero checkpoint jobs, long walks stay bounded.
-    val ranked = (1 to iters).foldLeft(p0) { (p, i) =>
-      if (i < iters && i % 3 == 0) step(p).localCheckpoint() else step(p)
+      saltDegree: Long = 0L, salts: Int = 16): DataFrame =
+    Rounds.run("pageRank") { r =>
+      // the n count materializes the pinned adjacency, so every
+      // downstream frame (p0, every iteration join) reads the cached
+      // relation instead of re-deriving the groupBy. n is an O(1) driver
+      // scalar folded into the plan as a LITERAL (Scala Long division ==
+      // SQL div), removing per-iteration one-row joins.
+      val saltedLayout = saltDegree > 0L
+      val adj = r.pin(pageRankAdjacency(edges, saltDegree, salts))
+      // one row per node for n and p0 (the salted layout holds hubs on
+      // several rows; the distinct reads the already-persisted adj)
+      val nodes = if (saltedLayout) adj.select(col("u")).distinct()
+        else adj.select(col("u"))
+      val n = nodes.count()
+      require(n > 0, "pageRank: edge frame has no source nodes")
+      val init = 1000000000L / n
+      val base = (15L * init) / 100L
+      val p0 = nodes.select(col("u").as("pu"), lit(init).as("pr"))
+      rankRounds(r, p0, iters) { p =>
+        adj.join(p, col("u") === col("pu"))
+          .select(col("vs"), expr("pr div d").as("c"))
+          .select(explode(col("vs")).as("pu"), col("c"))
+          .groupBy(col("pu"))
+          .agg((lit(base) + expr("(85L * sum(c)) div 100")).as("pr"))
+      }
     }
-    ranked.select(col("pu").as("u"), col("pr"))
+
+  /** The PageRank/PPR round loop: `iters` applications of `step` to the
+    * (pu, pr) rank frame, returned as (u, pr). Plan depth grows only
+    * LINEARLY per round, so the lineage is cut eagerly every third round
+    * instead of every round: short walks (iters <= 3) plan no cut inside
+    * the loop. The result is cut eagerly too — it reads the pinned
+    * adjacency, which is released when the kernel returns.
+    */
+  private def rankRounds(r: Rounds, p0: DataFrame, iters: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val ranked = (1 to iters).foldLeft(p0) { (p, i) =>
+      r.round(if (i < iters && i % 3 == 0) r.cut(step(p), eager = true)
+        else step(p))
+    }
+    r.cut(ranked.select(col("pu").as("u"), col("pr")), eager = true)
   }
 
   /** PERSONALIZED PageRank (random walk with restart, re-exported as
@@ -401,8 +410,10 @@ object Analytics {
     */
   private[graft] def pprOf(edges: DataFrame, seed: Long, iters: Int,
       saltDegree: Long = 0L, salts: Int = 16): DataFrame =
-    pprRounds(pageRankAdjacency(edges, saltDegree, salts).persist(),
-      seed, iters)
+    Rounds.run("personalizedPageRank") { r =>
+      pprRounds(r, r.pin(pageRankAdjacency(edges, saltDegree, salts)),
+        seed, iters)
+    }
 
   /** [[pprOf]] with the seed DERIVED from the graph itself (min source
     * node) instead of passed in — the `graph_ppr_seeded` contract. The
@@ -413,33 +424,30 @@ object Analytics {
     * result (same schema).
     */
   private[graft] def pprMinSeeded(edges: DataFrame, iters: Int,
-      saltDegree: Long = 0L, salts: Int = 16): DataFrame = {
-    val adj = pageRankAdjacency(edges, saltDegree, salts).persist()
-    val seedRow = adj.agg(min(col("u"))).head
-    if (seedRow.isNullAt(0))
-      adj.select(col("u"), lit(0L).as("pr")).where(lit(false))
-    else pprRounds(adj, seedRow.getLong(0), iters)
-  }
+      saltDegree: Long = 0L, salts: Int = 16): DataFrame =
+    Rounds.run("personalizedPageRank") { r =>
+      val adj = r.pin(pageRankAdjacency(edges, saltDegree, salts))
+      val seedRow = adj.agg(min(col("u"))).head
+      if (seedRow.isNullAt(0))
+        adj.select(col("u"), lit(0L).as("pr")).where(lit(false))
+      else pprRounds(r, adj, seedRow.getLong(0), iters)
+    }
 
-  private def pprRounds(adj: DataFrame, seed: Long, iters: Int)
+  private def pprRounds(r: Rounds, adj: DataFrame, seed: Long, iters: Int)
       : DataFrame = {
     val spark = adj.sparkSession
     import spark.implicits._
     val base = 150000000L // 0.15 · 1e9: the restart mass, seed-only
     val p0 = Seq((seed, 1000000000L)).toDF("pu", "pr")
-    val ranked = (1 to iters).foldLeft(p0) { (p, i) =>
-      val contrib = adj.join(p, col("u") === col("pu"))
+    rankRounds(r, p0, iters) { p =>
+      adj.join(p, col("u") === col("pu"))
         .select(col("vs"), expr("pr div d").as("c"))
         .select(explode(col("vs")).as("pu"), col("c"))
         .unionAll(Seq((seed, 0L)).toDF("pu", "c"))
-      val next = contrib.groupBy(col("pu"))
+        .groupBy(col("pu"))
         .agg((when(col("pu") === seed, lit(base)).otherwise(lit(0L))
           + expr("(85L * sum(c)) div 100")).as("pr"))
-      // same lineage rule as pageRankOf: depth grows linearly, cut
-      // every third round so short walks plan zero checkpoint jobs
-      if (i < iters && i % 3 == 0) next.localCheckpoint() else next
     }
-    ranked.select(col("pu").as("u"), col("pr"))
   }
 
   /** Shared body of the two co-purchase PageRank queries: basket edge
@@ -1120,6 +1128,17 @@ object Analytics {
   private def bcastUpTo(df: DataFrame, n: Long, cap: Long): DataFrame =
     if (n <= cap) broadcast(df) else df
 
+  /** Both orientations of the undirected (u, v) frame `edges0` as
+    * (src, dst), hash-partitioned by `key` into [[Rounds.partitions]]
+    * and pinned: persist, not a cut, so AQE still sees the partitioning
+    * (see [[Rounds]]). edges0 is checkpoint-pinned by caller contract, so
+    * the sizing count is a cheap cached-block scan.
+    */
+  private def pinnedSymmetric(r: Rounds, edges0: DataFrame,
+      key: String): DataFrame =
+    r.pin(symmetrize(edges0, "u", "v", "src", "dst").repartition(
+      Rounds.partitions(edges0.sparkSession, edges0.count() * 2), col(key)))
+
   /** Both orientations of an undirected (u, v[, carry...]) edge frame in
     * ONE pass: each row explodes into (u,v) and (v,u). Row-equivalent to
     * unionAll of the two swapped projections, but the input is scanned
@@ -1136,41 +1155,35 @@ object Analytics {
     e.select(explode(array(fwd, rev)).as("se")).select(col("se.*"))
   }
 
-  private[graft] def kCoreOf(edges0: DataFrame, k: Int): DataFrame = {
-    var edges = edges0
-    var cnt = edges.count()
-    var changed = cnt > 0
-    var rounds = 0
-    // explode, not unionAll: one scan of the (checkpointed) edge blocks
-    // per round instead of two, same (nd -> occurrences) multiset
-    def degrees(e: DataFrame) = e
-      .select(explode(array(col("u"), col("v"))).as("nd"))
-      .groupBy("nd").agg(count(lit(1)).as("dg"))
-    while (changed && rounds < GraphMaxRounds) {
-      // keep is ≤ 2·cnt nodes, so gating on the edge count already in
-      // hand bounds the broadcast without an extra keep.count() job
-      val keep = bcastUpTo(
-        degrees(edges).where(col("dg") >= k).select(col("nd")),
-        cnt, 2000000L)
-      // LAZY checkpoint: the count below materializes the blocks in
-      // the same job (plan truncation identical to the eager form,
-      // one round job instead of two)
-      val next = edges
-        .join(keep, col("u") === col("nd"), "left_semi")
-        .join(keep, col("v") === col("nd"), "left_semi")
-        .localCheckpoint(false)
-      val ncnt = next.count()
-      changed = ncnt != cnt
-      cnt = ncnt
-      edges = next
-      rounds += 1
+  private[graft] def kCoreOf(edges0: DataFrame, k: Int): DataFrame =
+    Rounds.run("kCore") { r =>
+      var edges = edges0
+      var cnt = edges.count()
+      // explode, not unionAll: one scan of the (checkpointed) edge blocks
+      // per round instead of two, same (nd -> occurrences) multiset
+      def degrees(e: DataFrame) = e
+        .select(explode(array(col("u"), col("v"))).as("nd"))
+        .groupBy("nd").agg(count(lit(1)).as("dg"))
+      val stable = cnt == 0 || r.until(GraphMaxRounds) { _ =>
+        // keep is ≤ 2·cnt nodes, so gating on the edge count already in
+        // hand bounds the broadcast without an extra keep.count() job
+        val keep = bcastUpTo(
+          degrees(edges).where(col("dg") >= k).select(col("nd")),
+          cnt, 2000000L)
+        edges = r.cut(edges
+          .join(keep, col("u") === col("nd"), "left_semi")
+          .join(keep, col("v") === col("nd"), "left_semi"))
+        val before = cnt
+        cnt = r.count(edges)
+        r.settle()
+        cnt == before
+      }
+      if (!stable)
+        r.exhausted(GraphMaxRounds, "the peel needs more rounds than the " +
+          "oracle's fixed recursion depth")
+      degrees(edges)
+        .select(col("nd").as("node"), col("dg").as("core_degree"))
     }
-    if (changed)
-      throw new IllegalStateException(
-        s"k-core peel did not stabilize in $GraphMaxRounds rounds")
-    degrees(edges)
-      .select(col("nd").as("node"), col("dg").as("core_degree"))
-  }
 
   /** Common-neighbor link prediction (re-exported as
     * `graft.api.Graft.commonNeighbors`): `edges` is a canonical
@@ -1452,7 +1465,7 @@ object Analytics {
     * diameter, ≤ `maxHops`.
     */
   private[graft] def shortestHopsOf(edges0: DataFrame, source: Long,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame = Rounds.run("shortestHops") { r =>
     val spark = edges0.sparkSession
     import spark.implicits._
     // The symmetric edge frame is hash-partitioned by dst ONCE, before
@@ -1460,61 +1473,38 @@ object Analytics {
     // partitioning, and the neighbor dedup keys on node = dst (the
     // alias-aware partitioning survives the rename), so each BFS round
     // runs with ZERO exchanges while the set frames stay inside
-    // broadcast range — this kernel used to pay one frontier-edge-sized
-    // repartition per round. Partition count is sized to the
-    // materialized edge set (rows-per-partition rule); edges0 is
-    // checkpoint-pinned by caller contract so the count is a cheap
-    // cached-block scan.
-    val sessParts =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val eparts = math.max(1, math.min(sessParts,
-      (edges0.count() * 2 / 50000L + 1L).toInt))
-    // persist, NOT localCheckpoint (see labelPropagationOf): AQE-era
-    // checkpoints surface as UnknownPartitioning and would re-introduce
-    // the per-round dedup exchange
-    val e = symmetrize(edges0, "u", "v", "src", "dst")
-      .repartition(eparts, col("dst"))
-      .persist()
-    // materialize the cache NOW: a round planned before the cache is
-    // built sees AQE's UnknownPartitioning and re-inserts the dedup
-    // exchange for that round (labelPropagationOf gets this for free
-    // from its node count; BFS has no natural pre-loop action)
+    // broadcast range. Materialized NOW: a round planned before the
+    // cache is built sees AQE's UnknownPartitioning and re-inserts the
+    // dedup exchange for that round.
+    val e = pinnedSymmetric(r, edges0, "dst")
     e.count()
-    var visited = Seq((source, 0L)).toDF("node", "hops")
-      .localCheckpoint(false)
+    var visited = r.cut(Seq((source, 0L)).toDF("node", "hops"))
     var frontier = visited.select(col("node"))
     var fcnt = 1L
     var vcnt = 1L
-    var h = 0L
-    while (fcnt > 0 && h < maxHops) {
-      h += 1
-      // The round frame is localCheckpoint'd — plan TRUNCATION matters
-      // here, not just caching: the next round references this frame
-      // twice (frontier and inside visited), so an untruncated plan
-      // would nest exponentially across rounds. visited stays a LAZY
-      // union of the checkpointed per-round frames — unioning pinned
-      // blocks is free, so re-checkpointing it every round would only
-      // add a job.
-      val round = e
+    // The round frame is cut — plan TRUNCATION matters here, not just
+    // caching: the next round references this frame twice (frontier and
+    // inside visited), so an untruncated plan would nest exponentially
+    // across rounds. visited stays a LAZY union of the per-round cuts —
+    // unioning pinned blocks is free, so re-cutting it every round would
+    // only add a job — and so the cuts are never settled: the result
+    // reads every one of them.
+    r.until(maxHops) { h =>
+      val nxt = r.cut(e
         .join(bcastUpTo(frontier, fcnt, 4000000L),
           col("src") === col("node"), "left_semi")
         .select(col("dst").as("node"))
         .distinct()
         .join(bcastUpTo(visited, vcnt, 4000000L),
           Seq("node"), "left_anti")
-        .withColumn("hops", lit(h))
-      // plan-audit hook (see labelPropagationOf)
-      if (h == 1L && sys.env.contains("GRAFT_EXPLAIN_ROUNDS"))
-        round.explain("formatted")
-      // LAZY: the loop-condition count materializes the round's
-      // blocks in its own job — one job per round, not two
-      val nxt = round.localCheckpoint(false)
-      fcnt = nxt.count()
+        .withColumn("hops", lit(h.toLong)))
+      fcnt = r.count(nxt)
       if (fcnt > 0) {
         visited = visited.unionAll(nxt)
         vcnt += fcnt
         frontier = nxt.select(col("node"))
       }
+      fcnt == 0
     }
     visited
   }
@@ -1536,44 +1526,34 @@ object Analytics {
     * O(E) per round, integer-only arithmetic.
     */
   private[graft] def shortestCostOf(edges0: DataFrame, source: Long,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Rounds.run("shortestCost") { r =>
     val spark = edges0.sparkSession
     import spark.implicits._
     // ZERO per-round driver syncs: unlike BFS (where the frontier count
     // IS the loop condition), Bellman-Ford runs a FIXED round count, so
     // nothing in the loop needs a per-round action. Every round frame
-    // is a LAZY localCheckpoint — the plan still truncates (the next
-    // round references dist TWICE, join side and carry side, so without
+    // is a LAZY cut — the plan still truncates (the next round
+    // references dist TWICE, join side and carry side, so without
     // truncation the logical tree would double every round) but the
     // whole relaxation chain materializes in ONE cascade at the
-    // caller's first action, each intermediate cached as its checkpoint
-    // blocks on first computation. Broadcast/partition gates use the
-    // symmetric edge count (computed once; dist is node-sized and
-    // nodes ≤ edge rows) instead of a per-round dist count.
-    val e = symmetrize(edges0, "u", "v", "src", "dst", Seq("cost"))
-      .localCheckpoint(false)
-    val ecnt = e.count()
-    var dist = Seq((source, 0L)).toDF("node", "cost")
-      .localCheckpoint(false)
-    for (r <- 1 to rounds) {
+    // caller's first action, so no cut is ever settled here.
+    // Broadcast/partition gates use the symmetric edge count (computed
+    // once; dist is node-sized and nodes ≤ edge rows) instead of a
+    // per-round dist count.
+    val e = r.cut(symmetrize(edges0, "u", "v", "src", "dst", Seq("cost")))
+    val ecnt = r.count(e)
+    var dist = r.cut(Seq((source, 0L)).toDF("node", "cost"))
+    for (_ <- 1 to rounds) r.round {
       // One exchange per round, carrying NODE-sized partial minima: the
       // min-combine's map-side partial aggregation collapses the
       // relaxation candidates (edge-sized) to at most one row per node
-      // per map partition before anything is shuffled. The explicit
-      // raw-row repartition this kernel used to pay shipped the whole
-      // candidate union un-aggregated — partial aggregation is the
-      // cheaper shuffle at every scale (guide §2.3), and AQE coalesces
-      // the node-sized tails.
+      // per map partition before anything is shuffled.
       val dd = dist.select(col("node").as("dn"), col("cost").as("d"))
-      val round = e
+      dist = r.cut(e
         .join(bcastUpTo(dd, ecnt, 4000000L), col("src") === col("dn"))
         .select(col("dst").as("node"), (col("d") + col("cost")).as("cost"))
         .unionAll(dist)
-        .groupBy("node").agg(min(col("cost")).as("cost"))
-      // plan-audit hook (see labelPropagationOf)
-      if (r == 1 && sys.env.contains("GRAFT_EXPLAIN_ROUNDS"))
-        round.explain("formatted")
-      dist = round.localCheckpoint(false)
+        .groupBy("node").agg(min(col("cost")).as("cost")))
     }
     dist
   }
@@ -1596,55 +1576,34 @@ object Analytics {
     * bounds the work: O(iters · E) total.
     */
   private[graft] def labelPropagationOf(edges0: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = Rounds.run("labelPropagation") { r =>
     // The symmetric edge frame is hash-partitioned by src ONCE, before
     // the loop — every round's broadcast label join preserves that
     // partitioning (the streamed side passes through a
     // BroadcastHashJoin unchanged), hash(src) satisfies the clustering
     // of BOTH per-round aggregates ((src, lbl) count and the src-keyed
-    // argmax), and the per-round node-sized repartition this kernel
-    // used to pay is gone: ZERO exchanges per round while the label
-    // frame stays inside broadcast range. (Past the gate the join
-    // shuffles on dst as before — partitioning e by src cannot serve a
-    // dst-keyed shuffle join — so nothing is lost at that scale.)
-    // Partition count is sized to the materialized edge set, the same
-    // rows-per-partition rule as the other kernels; edges0 is
-    // checkpoint-pinned by caller contract so the count is a cheap
-    // cached-block scan.
-    val ecnt2 = edges0.count() * 2
-    val parts = math.max(1, math.min(
-      edges0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-      (ecnt2 / 50000L + 1L).toInt))
-    // persist, NOT localCheckpoint: under AQE a checkpointed frame comes
-    // back as Scan ExistingRDD with UnknownPartitioning, silently
-    // re-introducing the per-round exchange this layout exists to avoid;
-    // the cached InMemoryRelation keeps hash(src) visible to every
-    // round's aggregates. Lineage here is shallow (pinned edges0 →
-    // explode → one exchange), so truncation is not needed.
-    val e = symmetrize(edges0, "u", "v", "src", "dst")
-      .repartition(parts, col("src"))
-      .persist()
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint(false)
-    val nNodes = labels.count()
-    for (i <- 1 to iters) {
-      // max_by over (count, -label) structs replaces the former
-      // row_number window (no per-partition sort). Ties are impossible
-      // in the struct (labels are distinct per group), so the pick is
-      // exactly "max count, then smallest label".
-      val round = e
+    // argmax): ZERO exchanges per round while the label frame stays
+    // inside broadcast range. (Past the gate the join shuffles on dst —
+    // partitioning e by src cannot serve a dst-keyed shuffle join — so
+    // nothing is lost at that scale.) The node count below materializes
+    // it before round 1.
+    val e = pinnedSymmetric(r, edges0, "src")
+    var labels = r.cut(e.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
+    val nNodes = r.count(labels)
+    for (i <- 1 to iters) r.round {
+      // max_by over (count, -label) structs: ties are impossible in the
+      // struct (labels are distinct per group), so the pick is exactly
+      // "max count, then smallest label". The last round's cut is eager:
+      // the lazy rounds read e, which is released on return.
+      labels = r.cut(e
         .join(bcastUpTo(labels, nNodes, 4000000L),
           col("dst") === col("node"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("src"))
         .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl")))
           .as("lbl"))
-        .select(col("src").as("node"), col("lbl"))
-      // plan-audit hook: the per-round frames are checkpoint-truncated,
-      // so a caller-side explain can never show the round shape
-      if (i == 1 && sys.env.contains("GRAFT_EXPLAIN_ROUNDS"))
-        round.explain("formatted")
-      labels = round.localCheckpoint(false)
+        .select(col("src").as("node"), col("lbl")), eager = i == iters)
     }
     labels.select(col("node"), col("lbl").as("community"))
   }

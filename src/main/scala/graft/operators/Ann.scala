@@ -1048,7 +1048,7 @@ object Ann {
     // the checkpoint's blocks are dead once the last layer is written —
     // free them (repeated index builds in one session would otherwise
     // accumulate checkpoint blocks in the block manager)
-    assign.unpersist(blocking = false)
+    Rounds.release(assign)
   }
 
   /** Tombstone DELETES routed to their cells — the `stream_ann_ingest`
@@ -1229,7 +1229,7 @@ object Ann {
           .parquet(s"$next/pq_codebook")
       }
     }
-    live.unpersist(blocking = false)
+    Rounds.release(live)
     if (publish) publishGeneration(dir, gen)
     censusFrame(census.map { case (c, nb, nt, nl) =>
       (c, nb, nt, nl,
@@ -1322,7 +1322,7 @@ object Ann {
           col("sv"))
         .groupBy("sub", "code").agg(vector_avg(col("sv")).as("cw"))
         .select(col("sub"), col("code"), col("cw")).collect())
-    subs.unpersist(false)
+    Rounds.release(subs)
     cb
   }
 
@@ -1564,23 +1564,20 @@ object Ann {
     * tiny centroid table so round r+1 doesn't replay rounds 1..r.
     */
   private[graft] def kmeansCells(e: org.apache.spark.sql.DataFrame,
-      k: Int, iters: Int): org.apache.spark.sql.DataFrame = {
-    var cents = e
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("cell"), col("embedding").as("cent"))
-      .localCheckpoint(true)
-    def assignTo(c: org.apache.spark.sql.DataFrame) = assignToCentroids(e, c)
-    for (_ <- 1 until iters) {
-      val prev = cents
-      cents = assignTo(cents)
-        .groupBy("cell").agg(vector_avg(col("embedding")).as("cent"))
-        .localCheckpoint(true)
-      // round r+1 only needs the NEW centroid checkpoint — free the
-      // previous round's k-row blocks (same discipline as the layer
-      // writers: no checkpoint outlives its last consumer)
-      prev.unpersist(blocking = false)
+      k: Int, iters: Int): org.apache.spark.sql.DataFrame =
+    Rounds.run("kmeansCells") { r =>
+      // each centroid cut is eager and so settles: round r+1 only needs
+      // the NEW k-row centroid blocks, the previous round's are released
+      var cents = r.cut(e
+        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+        .limit(k)
+        .select(col("vec_id").as("cell"), col("embedding").as("cent")),
+        eager = true)
+      for (_ <- 1 until iters) r.round {
+        cents = r.cut(assignToCentroids(e, cents)
+          .groupBy("cell").agg(vector_avg(col("embedding")).as("cent")),
+          eager = true)
+      }
+      assignToCentroids(e, cents)
     }
-    assignTo(cents)
-  }
 }

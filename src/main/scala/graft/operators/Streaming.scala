@@ -637,7 +637,7 @@ object Streaming {
               .parquet(s"$okDir/batch_$batchId")
             batch.where(!coalesce(gate, lit(false))).write.mode("overwrite")
               .parquet(s"$badDir/batch_$batchId")
-          } finally { batch.unpersist(); () }
+          } finally Rounds.release(batch)
         }
         .start()
       q.awaitTermination()

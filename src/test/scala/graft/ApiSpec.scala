@@ -1570,4 +1570,33 @@ class ApiSpec extends SparkSuite {
     // one type occurring n=3 times: K = 1e4*(9-3)/9
     assert(rows("r") == 10000.0 * 6.0 / 9.0)
   }
+
+  test("iterative kernels: repeated calls agree and leave no cache entry") {
+    import spark.implicits._
+    // two triangles bridged by 3-5, a tail 7-8, and a far pair 20-21
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 5L), (5L, 6L),
+      (5L, 7L), (6L, 7L), (7L, 8L), (20L, 21L)).toDF("u", "v")
+    val both = e.union(e.select(col("v"), col("u")))
+    val we = e.withColumn("cost", col("u") % 3 + 1)
+    val pairs = e.select(col("u").as("doc_a"), col("v").as("doc_b"))
+    val kernels: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Graft.pageRank(both, iters = 4)),
+      "personalizedPageRank" ->
+        (() => Graft.personalizedPageRank(both, seed = 1L, iters = 4)),
+      "kCore" -> (() => Graft.kCore(e, k = 2)),
+      "shortestHops" -> (() => Graft.shortestHops(e, source = 1L)),
+      "shortestCost" -> (() => Graft.shortestCost(we, source = 1L)),
+      "labelPropagation" -> (() => Graft.labelPropagation(e, iters = 3)),
+      "dedupClusters" -> (() => Graft.dedupClusters(pairs)),
+      "dedupClustersLogN" -> (() => Graft.dedupClustersLogN(pairs)))
+    def cached = org.apache.spark.sql.GraftTestAccess.cachedEntries(spark)
+    for ((name, kernel) <- kernels) {
+      val before = cached
+      val runs = (1 to 3).map(_ =>
+        kernel().collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+      assert(runs.head.nonEmpty && runs.forall(_ == runs.head),
+        s"$name: results differ across calls: $runs")
+      assert(cached == before, s"$name left ${cached - before} cache entries")
+    }
+  }
 }

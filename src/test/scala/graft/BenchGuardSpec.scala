@@ -423,4 +423,23 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.detailWriteEligible(Some(prior), 0.01, 0.45, 2.0,
       force = true, sfDir = "/root/testdata/sf0.001")._1)
   }
+
+  test("detailWriteEligible: sf directories compare by their sf token") {
+    // the committed denominator's sf under another spelling of the same
+    // directory: trailing slash, relocated testdata root
+    for (dir <- Seq("/root/testdata/sf0.1/", "/data/graft/sf0.1"))
+      assert(Bench.detailWriteEligible(Some(prior), 0.01, 0.45, 2.0,
+        force = false, sfDir = dir)._1, dir)
+  }
+
+  test("detailWriteEligible: an unparseable prior routes to the sidecar " +
+      "with a note") {
+    val noCalib = prior.replace(""""calib_loaded":0.50,""", "")
+    val truncated = prior.take(prior.indexOf("\"queries\""))
+    for (p <- Seq(noCalib, truncated)) {
+      val (eligible, note) = Bench.detailWriteEligible(Some(p), 0.01, 0.45,
+        2.0, force = false, sfDir = sf)
+      assert(!eligible && note.exists(_.contains("does not parse")), p)
+    }
+  }
 }
