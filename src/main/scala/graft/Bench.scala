@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Fixed pure-JVM integer workload (no Spark, no IO, no allocation) —
@@ -39,6 +38,47 @@ object Bench {
     dt
   }
 
+  /** Streaming queries run ONCE per sweep (init-dominated wall that
+    * repeats identically — min-of-two buys nothing, see BASELINE.md), so
+    * BOTH their committed baseline and any current value are single
+    * samples of a noisy per-job init cost (measured spread: 0.90–1.46 s
+    * for the same query on identical code within one session). The guard
+    * widens their wall gate accordingly.
+    */
+  private[graft] def isStreamingQuery(name: String): Boolean =
+    name.startsWith("stream_") || name == "source_rate_stream"
+
+  /** The top-level fields of a BENCH_DETAIL.json that the guards read;
+    * failed (null) per-query entries are dropped.
+    */
+  private[graft] final case class Detail(value: Option[Double],
+      calib: Option[Double], calibLoaded: Option[Double], sf: Option[String],
+      streamMin3: Boolean, queries: Map[String, Double],
+      queriesCpu: Map[String, Double], stateRows: Map[String, Double])
+
+  /** Parses a BENCH_DETAIL.json; None unless it is one JSON object, so a
+    * snapshot truncated mid-block (a bounded stdout tail has produced one)
+    * is no baseline rather than a partial one.
+    */
+  private[graft] def parseDetail(text: String): Option[Detail] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Try(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(text))
+      .toOption.filter(d => d != null && d.isObject).map { d =>
+        def num(key: String) =
+          Option(d.get(key)).filter(_.isNumber).map(_.asDouble)
+        def nums(key: String): Map[String, Double] =
+          Option(d.get(key)).filter(_.isObject).toSeq
+            .flatMap(_.properties.asScala)
+            .collect { case e if e.getValue.isNumber =>
+              e.getKey -> e.getValue.asDouble }.toMap
+        Detail(num("value"), num("calib"), num("calib_loaded"),
+          Option(d.get("sf")).filter(_.isTextual).map(_.asText),
+          num("stream_min3").contains(1.0), nums("queries"),
+          nums("queries_cpu"), nums("state_rows"))
+      }
+  }
+
   /** Cross-round regression adjudication, pure and unit-testable
     * (BenchGuardSpec). Inputs: the committed BENCH_DETAIL artifact and the
     * current run's (name, wall, cpu) triples + calibrations. Returns
@@ -58,44 +98,26 @@ object Bench {
     * No >=1.0 clamp (ADVICE r8): on a faster host than the committed
     * baseline the ratio drops BELOW 1 and the thresholds tighten, so a
     * baseline committed from a slow placement no longer masks real
-    * regressions up to the placement factor.
+    * regressions up to the placement factor. The prior counts only when
+    * it parses and its sf directory has the run's sf token.
     */
-  /** Streaming queries run ONCE per sweep (init-dominated wall that
-    * repeats identically — min-of-two buys nothing, see BASELINE.md), so
-    * BOTH their committed baseline and any current value are single
-    * samples of a noisy per-job init cost (measured spread: 0.90–1.46 s
-    * for the same query on identical code within one session). The guard
-    * widens their wall gate accordingly.
-    */
-  private[graft] def isStreamingQuery(name: String): Boolean =
-    name.startsWith("stream_") || name == "source_rate_stream"
-
   private[graft] def guardFlags(prior: String,
       results: Seq[(String, Double, Double)],
       calib: Double, calibLoaded: Double,
       sfDir: String,
       currentStealFrac: Double = 0.0,
       stateRows: Map[String, Long] = Map.empty)
+      : (Seq[String], Seq[String]) =
+    guard(parseDetail(prior), results, calib, calibLoaded, sfDir,
+      currentStealFrac, stateRows)
+
+  private def guard(prior: Option[Detail],
+      results: Seq[(String, Double, Double)],
+      calib: Double, calibLoaded: Double, sfDir: String,
+      currentStealFrac: Double, stateRows: Map[String, Long])
       : (Seq[String], Seq[String]) = {
     def sec(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val sameSf = prior.contains(s""""sf":"$sfDir"""")
-    def block(key: String): Map[String, Double] = {
-      val i = prior.indexOf("\"" + key + "\":{")
-      val end = if (i < 0) -1 else prior.indexOf("}", i)
-      // end < 0: the committed snapshot was truncated mid-block (the driver
-      // captures a bounded stdout tail; a hand-committed partial file has
-      // happened) — treat as no baseline rather than throwing out of main.
-      if (i < 0 || end < 0) Map.empty
-      else {
-        val b = prior.substring(i + key.length + 4, end)
-        """"([^"]+)":([0-9.]+)""".r.findAllMatchIn(b)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
-    def scalar(key: String): Option[Double] =
-      ("\"" + key + "\":([0-9.]+)").r.findFirstMatchIn(prior)
-        .map(_.group(1).toDouble)
     // r10 lesson: a 28%-steal run produced six per-query flags on untouched
     // code — noise presented as signal. When the CURRENT run is provably
     // contended, per-query adjudication is impossible; say so once and emit
@@ -104,14 +126,14 @@ object Bench {
       (Nil, Seq(f"[bench-host] unadjudicable: current run lost " +
         f"${currentStealFrac * 100}%.0f%% of wall to steal/iowait — " +
         "skipping per-query regression flags (re-run on a quieter host)"))
-    else if (!sameSf) (Nil, Nil)
-    else {
-      val priorWall = block("queries")
-      val priorCpu = block("queries_cpu")
-      if (priorWall.isEmpty) (Nil, Nil)
-      else {
-        val idleRatio = scalar("calib").map(calib / _).getOrElse(1.0)
-        val loadedRatio = scalar("calib_loaded").map(calibLoaded / _)
+    else prior.filter(d => d.queries.nonEmpty &&
+        d.sf.exists(sfToken(_) == sfToken(sfDir))) match {
+      case None => (Nil, Nil)
+      case Some(d) =>
+        val priorWall = d.queries
+        val priorCpu = d.queriesCpu
+        val idleRatio = d.calib.map(calib / _).getOrElse(1.0)
+        val loadedRatio = d.calibLoaded.map(calibLoaded / _)
           .getOrElse(idleRatio)
         // fleet-median cpu inflation: only queries big enough for the
         // ratio to be signal (>=0.05 s committed cpu)
@@ -151,9 +173,8 @@ object Bench {
             // as batch (ADVICE r13); a legacy single-draw baseline keeps
             // the wider 1.6x. Repeated-min batch measurements are always
             // 1.5x.
-            val minSampledBaseline = prior.contains("\"stream_min3\":1")
             val wallFactor =
-              if (isStreamingQuery(name) && !minSampledBaseline) 1.6
+              if (isStreamingQuery(name) && !d.streamMin3) 1.6
               else 1.5
             // Streaming walls never normalize BELOW 1: their cost is
             // per-job init, which does not speed up with a faster
@@ -212,17 +233,15 @@ object Bench {
         // Gate: >1.3x AND +100 rows absolute (micro-batch boundaries can
         // shift which intermediate total the listener observes; the final
         // totals themselves are deterministic).
-        val priorState = block("state_rows")
         val stateFlags = stateRows.toSeq.sortBy(_._1).flatMap {
-          case (name, rows) => priorState.get(name).collect {
-            case p if rows > 1.3 * p && rows - p > 100 =>
-              s"[bench-state] $name: state rows ${p.toLong} -> $rows " +
+          case (name, rows) => d.stateRows.get(name).collect {
+            case ps if rows > 1.3 * ps && rows - ps > 100 =>
+              s"[bench-state] $name: state rows ${ps.toLong} -> $rows " +
                 "(state growth is placement-independent — a retention " +
                 "regression, not host noise)"
           }
         }
         (flags ++ stateFlags, notes.result())
-      }
     }
   }
 
@@ -247,7 +266,16 @@ object Bench {
     */
   private[graft] def detailWriteEligible(prior: Option[String],
       stealFrac: Double, calibLoaded: Double, total: Double,
-      force: Boolean, sfDir: String = ""): (Boolean, Option[String]) = {
+      force: Boolean, sfDir: String = ""): (Boolean, Option[String]) =
+    writeEligible(prior.map(parseDetail), stealFrac, calibLoaded, total,
+      force, sfDir)
+
+  /** [[detailWriteEligible]] on a parsed prior: None when no denominator
+    * is committed, Some(None) when one is but does not parse.
+    */
+  private def writeEligible(prior: Option[Option[Detail]],
+      stealFrac: Double, calibLoaded: Double, total: Double,
+      force: Boolean, sfDir: String): (Boolean, Option[String]) = {
     val sidecar = " — writing BENCH_DETAIL.dirty.json " +
       "(SPARK_GRAFT_FORCE_DETAIL=1 overrules)"
     if (force) (true, None)
@@ -256,20 +284,13 @@ object Bench {
         "wall to steal/iowait — writing BENCH_DETAIL.dirty.json"))
     else prior match {
       case None => (true, None)
-      case Some(p) =>
-        // top-level fields only: a nested "value" can never be read as
-        // the committed total
-        val doc = scala.util.Try(
-          new com.fasterxml.jackson.databind.ObjectMapper().readTree(p))
-          .toOption.filter(_.isObject)
-        def field(key: String) = doc.flatMap(d => Option(d.get(key)))
-        def num(key: String) = field(key).filter(_.isNumber).map(_.asDouble)
+      case Some(doc) =>
         // a committed denominator at a DIFFERENT scale factor must never
         // be overwritten by a small-sf dev sweep: its total is trivially
         // "faster", which the faster-always-lands rule would otherwise
         // wave through
-        val priorSf = field("sf").filter(_.isTextual).map(_.asText)
-        if (sfDir.nonEmpty && priorSf.exists(sfToken(_) != sfToken(sfDir)))
+        if (sfDir.nonEmpty &&
+            doc.flatMap(_.sf).exists(sfToken(_) != sfToken(sfDir)))
           (false, Some("[bench-detail] run sf " + sfDir + " differs from " +
             "the committed denominator's" + sidecar))
         else if (stealFrac > 0.05)
@@ -277,7 +298,7 @@ object Bench {
             f"${stealFrac * 100}%.1f%% of wall exceeds the 5%% " +
             "overwrite bar while a committed clean denominator exists, " +
             "which stays the guard baseline" + sidecar))
-        else (num("calib_loaded"), num("value")) match {
+        else (doc.flatMap(_.calibLoaded), doc.flatMap(_.value)) match {
           case (Some(pc), Some(pt)) if calibLoaded > 1.25 * pc && total > pt =>
             (false, Some(f"[bench-detail] loaded calib $calibLoaded%.3f " +
               "is >1.25x the committed denominator's and the sweep is " +
@@ -298,43 +319,14 @@ object Bench {
     dir.split('/').filter(_.nonEmpty).lastOption.getOrElse(dir)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the events readers normalize ts via a TIMESTAMP_NTZ cast that is
-      // value-identical to the stored instant only under a UTC session —
-      // every entry point pins it (Verify/Smoke do too)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // a warm-up failure must be attributable: its cost would otherwise land
-    // silently on the first timed query
-    def warm(label: String)(body: => Unit): Unit =
-      try body catch { case t: Throwable =>
-        System.err.println(s"[bench-warmup] $label failed: $t") }
-    // untimed warm-up: JVM/codegen/parquet-reader init otherwise lands on
-    // whichever query runs first (~3 s of non-operator cost)
-    warm("core") {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).count()
-      spark.range(10).select(org.apache.spark.sql.functions.sum("id")).count()
-      // streaming machinery (incremental planner, state-store managers,
-      // RocksDB native library) is also one-time init, not operator cost
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val w = spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", "10").load()
-        .groupBy("value").count()
-      graft.streaming.Streams.runToTable(w, "complete", 2).count()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir, "bench")
     // one-time table layouts (bucketed warehouse write, partitioned events
     // rewrite) are storage preparation a real deployment does once, not
     // per-query cost — build them here so join_bucketed / the pruning
     // queries time the join/scan, not the layout
-    warm("layout") {
+    Harness.warm("bench", "layout") {
       operators.Extended.bucketedJoin(spark, sfDir).limit(1).count()
       operators.ScaleOps.partitionedEvents(spark, sfDir)
     }
@@ -354,7 +346,7 @@ object Bench {
     // idle + loaded calibrations (see calibrate): idle first so its probe
     // warms the JIT for the threaded copies
     val calib = calibrate(1)
-    val calibLoaded = calibrate(math.max(2, cpus.toInt))
+    val calibLoaded = calibrate(math.max(2, Harness.cpus))
     // host-level iowait/steal jiffies (/proc/stat cpu line, fields 5+8):
     // process-CPU telemetry can't see time the whole GUEST lost to disk
     // waits or the hypervisor; the sweep-wide deltas ride in the artifact
@@ -386,32 +378,31 @@ object Bench {
     // The comparison baseline is the COMMITTED snapshot (git HEAD), not
     // the working file: the working copy can hold a host-contended driver
     // run, and comparing against it would poison the next round's guard.
-    def committedDetail(): Option[String] =
+    // It is read and parsed once, before the sweep: the streaming resample
+    // trigger, the regression guard and the write-eligibility gate all
+    // read this one value.
+    val committed: Option[String] =
       try {
         val p = new ProcessBuilder("git", "show", "HEAD:BENCH_DETAIL.json")
           .redirectErrorStream(false).start()
         val out = new String(p.getInputStream.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
-        if (p.waitFor() == 0 && out.contains("\"queries\"")) Some(out) else None
+        if (p.waitFor() == 0) Some(out) else None
       } catch { case _: Throwable => None }
-    // Committed streaming walls, parsed up-front: a streaming query whose
-    // FIRST sample exceeds its committed wall gets re-sampled (min of up
-    // to 3 runs) so the guard can hold a 1.6x gate instead of the old
-    // single-sample-vs-single-sample 2x (ADVICE r12). The trigger sits
-    // below the flag gate (1.35x and 0.25 s) so borderline draws re-sample
-    // too; re-runs are capped sweep-wide so a contended host can't turn
-    // the whole streaming family into triple runs.
-    val committedForResample = committedDetail().getOrElse("")
-    val priorStreamWall: Map[String, Double] = {
-      val i = committedForResample.indexOf("\"queries\":{")
-      val end = if (i < 0) -1 else committedForResample.indexOf("}", i)
-      if (i < 0 || end < 0) Map.empty
-      else """"([a-z0-9_]+)":([0-9.]+)""".r
-        .findAllMatchIn(committedForResample.substring(i, end + 1))
-        .collect { case m if isStreaming(m.group(1)) =>
-          m.group(1) -> m.group(2).toDouble }
-        .toMap
-    }
+    // outside a git checkout the guard falls back to the working file
+    val baselineText = committed.orElse(scala.util.Try(new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+        "BENCH_DETAIL.json")), java.nio.charset.StandardCharsets.UTF_8))
+      .toOption)
+    val baseline = baselineText.flatMap(parseDetail)
+    // A streaming query whose FIRST sample exceeds its committed wall gets
+    // re-sampled (min of up to 3 runs) so the guard can hold a 1.6x gate
+    // instead of the old single-sample-vs-single-sample 2x (ADVICE r12).
+    // The trigger sits below the flag gate (1.35x and 0.25 s) so
+    // borderline draws re-sample too; re-runs are capped sweep-wide so a
+    // contended host can't turn the whole streaming family into triple
+    // runs.
+    val priorWall = baseline.map(_.queries).getOrElse(Map.empty)
     // Baseline-producing runs (SPARK_GRAFT_BASELINE=1) take EVERY
     // streaming query as min-of-3, uncapped: the committed denominator is
     // then a min-of-samples draw, which is what lets guardFlags hold the
@@ -433,29 +424,19 @@ object Bench {
       new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val currentQuery = new java.util.concurrent.atomic.AtomicReference("")
     val lastStateEvent = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stateListener =
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryProgressEvent): Unit = {
-          lastStateEvent.set(System.nanoTime())
-          val name = currentQuery.get()
-          val ops = e.progress.stateOperators
-          if (name.nonEmpty && ops != null && ops.nonEmpty) {
-            val rows = ops.map(_.numRowsTotal).sum
-            val bytes = ops.map(_.memoryUsedBytes).sum
-            stateRowsByQuery.merge(name, rows, math.max(_, _))
-            stateBytesByQuery.merge(name, bytes, math.max(_, _))
-          }
+    val stateListener = Harness.progressListener(
+      progress => {
+        lastStateEvent.set(System.nanoTime())
+        val name = currentQuery.get()
+        val ops = progress.stateOperators
+        if (name.nonEmpty && ops != null && ops.nonEmpty) {
+          val rows = ops.map(_.numRowsTotal).sum
+          val bytes = ops.map(_.memoryUsedBytes).sum
+          stateRowsByQuery.merge(name, rows, math.max(_, _))
+          stateBytesByQuery.merge(name, bytes, math.max(_, _))
         }
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryTerminatedEvent): Unit =
-          lastStateEvent.set(System.nanoTime())
-      }
+      },
+      () => lastStateEvent.set(System.nanoTime()))
     spark.streams.addListener(stateListener)
     // wait until listener events have been quiet for 150 ms (cap 1 s):
     // called AFTER a streaming query's timed window, so attribution is
@@ -501,7 +482,7 @@ object Bench {
           // (1.35x wall and 0.25 s absolute vs the gate's 1.5x/0.3 s),
           // so every draw that could flag has been re-sampled and the
           // guard's min-vs-min premise holds.
-          val suspicious = priorStreamWall.get(q.name)
+          val suspicious = priorWall.get(q.name)
             .exists(p => t1 > 1.35 * p && t1 - p > 0.25)
           if (!baselineMode &&
               (!suspicious || streamResamples >= maxStreamResamples))
@@ -611,27 +592,27 @@ object Bench {
       case Some((i, s)) if total > 0 => (i + s) / total
       case _ => 0.0
     }
-    val committedPrior = committedDetail()
-    val (detailEligible, detailNote) = detailWriteEligible(
-      committedPrior, stealFrac, calibLoaded, total,
+    // only a committed denominator guards the clean path; when there is
+    // one, `baseline` is its parse
+    val (detailEligible, detailNote) = writeEligible(
+      committed.map(_ => baseline), stealFrac, calibLoaded, total,
       sys.env.get("SPARK_GRAFT_FORCE_DETAIL").contains("1"), sfDir)
     detailNote.foreach(System.err.println)
     val detailPath = java.nio.file.Paths.get(
       if (detailEligible) "BENCH_DETAIL.json" else "BENCH_DETAIL.dirty.json")
-    val cleanPath = java.nio.file.Paths.get("BENCH_DETAIL.json")
     try {
-      val baseline = committedPrior.orElse {
-        if (java.nio.file.Files.isRegularFile(cleanPath))
-          Some(new String(java.nio.file.Files.readAllBytes(cleanPath),
-            java.nio.charset.StandardCharsets.UTF_8))
-        else None
-      }
-      for (prior <- baseline) {
+      // a prior that exists but does not parse switches the per-query
+      // guard off: say so instead of staying silent
+      if (baselineText.isDefined && baseline.isEmpty)
+        System.err.println("[bench-guard] the baseline BENCH_DETAIL.json " +
+          "does not parse as one JSON object — per-query regression flags " +
+          "are off for this run")
+      if (baselineText.isDefined) {
         val triples = results.collect {
           case (n, t, c, _, None) => (n, t, c)
         }
         val (flags, notes) =
-          guardFlags(prior, triples, calib, calibLoaded, sfDir, stealFrac,
+          guard(baseline, triples, calib, calibLoaded, sfDir, stealFrac,
             stateRowsMap)
         (notes ++ flags).foreach(System.err.println)
       }

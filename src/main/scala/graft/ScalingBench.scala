@@ -218,23 +218,11 @@ object ScalingBench {
   private def bandJoinState(s: SparkSession, dir: String, bound: Int)
       : (Double, Long, Long) = {
     val maxState = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener =
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryProgressEvent): Unit = {
-          val ops = e.progress.stateOperators
-          if (ops != null && ops.nonEmpty)
-            maxState.getAndAccumulate(ops.map(_.numRowsTotal).sum,
-              math.max(_, _))
-        }
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryTerminatedEvent): Unit = ()
-      }
+    val listener = Harness.progressListener { progress =>
+      val ops = progress.stateOperators
+      if (ops != null && ops.nonEmpty)
+        maxState.getAndAccumulate(ops.map(_.numRowsTotal).sum, math.max(_, _))
+    }
     s.streams.addListener(listener)
     try {
       val t0 = System.nanoTime()
@@ -262,16 +250,9 @@ object ScalingBench {
 
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("SCALING.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaleRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       "target/scaling")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // scale points: (relative scale, fixture dir); sf0.1 is the
     // driver-generated original, the rest are ScaleGen amplifications.
     // At 1× the skew corpus IS the base corpus (copy 0 never shifts),
@@ -311,16 +292,9 @@ object ScalingBench {
       ScaleGen.generate(spark, src, dir, f.toInt,
         holdHotUsers = hotUserHeld)
     }
-    // the same warm-up discipline as Bench: JVM/codegen/streaming init
-    // must not land on the first timed kernel
-    try {
-      spark.read.parquet(s"$src/lineitem.parquet").limit(100).count()
-      val w = spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", "10").load()
-        .groupBy("value").count()
-      graft.streaming.Streams.runToTable(w, "complete", 2).count()
-    } catch { case t: Throwable =>
-      System.err.println(s"[scaling-warmup] $t") }
+    // the same warm-up as Bench: JVM/codegen/streaming init must not land
+    // on the first timed kernel
+    Harness.warmUp(spark, src, "scaling")
     val byName = SparkEntry.all.map(q => q.name -> q).toMap
     val mainRows = sweep(spark,
       scaleQueries.flatMap(byName.get),

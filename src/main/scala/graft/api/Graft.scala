@@ -893,11 +893,7 @@ object Graft {
       uCol: String = "u", vCol: String = "v",
       maxMiddleDegree: Int = 1000): DataFrame =
     graft.operators.Analytics.commonNeighborsOf(
-      edges.select(least(col(uCol), col(vCol)).as("u"),
-          greatest(col(uCol), col(vCol)).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(false), topN, maxMiddleDegree)
+      lowHighEdges(edges, uCol, vCol), topN, maxMiddleDegree)
 
   /** Synchronous label-propagation communities over an undirected edge
     * frame: exactly `iters` lockstep rounds, each re-labeling every

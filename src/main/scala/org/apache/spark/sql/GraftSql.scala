@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * wrapping a custom Catalyst [[Expression]] into a user-facing [[Column]]
   * (the Spark 4.x `Column` carries a `ColumnNode`, not an `Expression`, so
   * third-party expressions need this one hop) and registering SQL function
-  * builders on an already-built session.
+  * builders on an already-built session; and draining the listener bus, so
+  * a profiler reads every stage and progress event of the job it timed.
   */
 object GraftSql {
   /** Wrap a raw Catalyst expression as a Column. */
@@ -26,4 +27,8 @@ object GraftSql {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
   }
+
+  /** Block until every posted listener event has been delivered. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -105,6 +105,15 @@ class BenchGuardSpec extends AnyFunSuite {
       now, 0.45, 0.50, sf)._1.isEmpty)
   }
 
+  test("guard compares sf directories by their sf token") {
+    // the same directory spelled with a trailing slash must not switch
+    // every per-query flag off
+    val now = Seq(("qa", 3.0, 6.0), ("qb", 2.0, 4.0), ("qc", 0.5, 1.0))
+    val flags = Bench.guardFlags(prior, now, 0.45, 0.50,
+      "/root/testdata/sf0.1/")._1
+    assert(flags.size == 1 && flags.head.contains("qa"), flags.toString)
+  }
+
   test("severe wall blow-up flags even when cpu stays flat (no cpu veto)") {
     // the r15 miss: q22_quiet_customers ran 3.36x its committed wall on
     // a quiet host but its cpu barely moved (scheduling-delay
